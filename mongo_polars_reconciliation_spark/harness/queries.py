@@ -300,7 +300,7 @@ def recon_summary_doc(spark, sf_dir) -> DataFrame:
 def recon_persist_roundtrip(spark, sf_dir) -> DataFrame:
     """Reference's end-of-run persistence loop END-TO-END
     (``persist_results``, second_conciliate.py:486-503): cascade → each
-    bucket staged then moved time-partitioned into its final dir → the
+    bucket checkpointed then written time-partitioned into its final dir → the
     aggregated-results doc computed FROM the re-read final buckets and
     persisted too. Every returned row is derived from what actually landed
     on disk, so the oracle checks the whole write→read path, not the
@@ -3047,81 +3047,11 @@ def stream_incremental_match(spark, sf_dir) -> DataFrame:
 # touch only queries inside the driver's ~50-position budget, so their
 # fresh rows still verify final code. The r9 ledger is inside the dict.
 QUERIES = {
-    # ================= r16 DRIVER-VERIFICATION LEDGER =================
-    # The driver checks the FIRST ~50 entries each round (budget exactly
-    # 50 in r5-r15). Ordering discipline (r5-r15 verdicts): this reorder
-    # is the round's LAST semantics-touching commit; any later change may
-    # touch only queries inside the 50-position budget.
-    #
-    # Registry 133 (unchanged this round: 0 new faces, 0 retirements —
-    # the rotation consumes all 50 slots; VERDICT r15 #1 mandates strict
-    # stalest-first from here on, bounding max staleness at
-    # ceil(133/50) = 3 rounds).
-    #
-    # -- 1-35: the r12-row block (the r12 ledger's surviving 35 rows in
-    #    preserved order) — 3 rounds stale at r15 close; VERDICT r15 #1:
-    #    these MUST lead r16, draining the starved block completely.
-    # -- 36-50: the 15 STALEST r14-block rows (the front of the r15
-    #    ledger's positions 51-98, preserved order).
-    # -- 51-83: the remaining 33 r14-block rows (preserved order) — these
-    #    plus the 50 r15 rows lead r17 (they will be 2 and 1 rounds stale
-    #    respectively at r16 close; stalest-first puts the 33 first).
-    # -- 84-133: the 50 r15-row block (the r15 ledger in preserved
-    #    order).
-    # ==================================================================
-
-    "events_top_users_per_type": events_top_users_per_type,
-    "text_tfidf_top_terms": text_tfidf_top_terms,
-    "text_pack_sequences": text_pack_sequences,
-    "events_salted_agg": events_salted_agg,
-    "events_hist_quantiles": events_hist_quantiles,
-    "text_scrub_terms": text_scrub_terms,
-    "text_chunk": text_chunk,
-    "text_repetition": text_repetition,
-    "text_contamination": text_contamination,
-    "text_fingerprint": text_fingerprint,
-    "text_ngram_freq": text_ngram_freq,
-    "recon_match_exact": recon_match_exact,
-    "recon_duplicate_losers": recon_duplicate_losers,
-    "sim_recall_probe_sampled": sim_recall_probe_sampled,
-    "text_bpe_vocab_roundtrip": text_bpe_vocab_roundtrip,
-    "mm_payload_dedup": mm_payload_dedup,
-    "text_bpe_merges": text_bpe_merges,
-    "text_bpe_encode": text_bpe_encode,
-    "text_quality_gate": text_quality_gate,
-    "text_datacard": text_datacard,
-    "text_ngram_novelty": text_ngram_novelty,
-    "text_split_cluster_safe": text_split_cluster_safe,
-    "text_dup_spans": text_dup_spans,
-    "text_dup_spans_trim": text_dup_spans_trim,
-    "dedup_ngram_jaccard": dedup_ngram_jaccard,
-    "dedup_embedding_cosine": dedup_embedding_cosine,
-    "sim_knn_join": sim_knn_join,
-    "sim_semantic_dedup": sim_semantic_dedup,
-    "recon_residual_internal": recon_residual_internal,
-    "recon_residual_external": recon_residual_external,
-    "text_line_dedup": text_line_dedup,
-    "text_line_dedup_trim": text_line_dedup_trim,
-    "curation_pipeline_v4": curation_pipeline_v4,
-    "text_pii_scrub": text_pii_scrub,
-    "text_pack_shards_roundtrip": text_pack_shards_roundtrip,
-    # -- 36-50: the 15 stalest r14-block rows --
-    "text_bloom_decontaminate": text_bloom_decontaminate,
-    "events_hist_merge": events_hist_merge,
-    "text_split_leakage_safe": text_split_leakage_safe,
-    "dedup_source_overlap": dedup_source_overlap,
-    "sim_topk_ivf_fitted": sim_topk_ivf_fitted,
-    "dedup_embedding_cosine_fitted": dedup_embedding_cosine_fitted,
-    "recon_persist_roundtrip": recon_persist_roundtrip,
-    "recon_csv_roundtrip": recon_csv_roundtrip,
-    "recon_csv_sink_roundtrip": recon_csv_sink_roundtrip,
-    "recon_mongo_json_scan": recon_mongo_json_scan,
-    "recon_orc_roundtrip": recon_orc_roundtrip,
-    "stream_incremental_match": stream_incremental_match,
-    "stream_dedup_corpus": stream_dedup_corpus,
-    "stream_dedup": stream_dedup_events,
-    "stream_events_hourly": stream_events_hourly,
-    # -- 51-83: the remaining r14-block rows (lead r17) --
+    # Stalest-first verification order: exactly ``canonical_order`` from
+    # tools/rotation_check.py — every face sorted by the round of the last
+    # CORRECTNESS ledger that checked it, within one round in that
+    # ledger's order. Each round's external check samples the first ~50.
+    # -- 1-33: last verified r14 --
     "stream_sessionize_agg": stream_sessionize_agg,
     "stream_user_seq": stream_user_seq,
     "stream_view_attribution": stream_view_attribution,
@@ -3155,7 +3085,7 @@ QUERIES = {
     "events_user_running_value": events_user_running_value,
     "events_asof_last_view": events_asof_last_view,
     "events_daily_rollup2": events_hourly_from_daily_rollup,
-    # -- 84-133: the r15-row block --
+    # -- 34-83: last verified r15 --
     "recon_zero_effect_pairs": recon_zero_effect_pairs,
     "recon_zero_effect_clean": recon_zero_effect_clean,
     "recon_tolerance_match": recon_tolerance_match,
@@ -3206,6 +3136,57 @@ QUERIES = {
     "text_heavy_hitters_cms": text_heavy_hitters_cms,
     "text_cms_merge": text_cms_merge,
     "recon_cascade_skewed": recon_cascade_skewed,
+    # -- 84-133: last verified r17 --
+    "events_top_users_per_type": events_top_users_per_type,
+    "text_tfidf_top_terms": text_tfidf_top_terms,
+    "text_pack_sequences": text_pack_sequences,
+    "events_salted_agg": events_salted_agg,
+    "events_hist_quantiles": events_hist_quantiles,
+    "text_scrub_terms": text_scrub_terms,
+    "text_chunk": text_chunk,
+    "text_repetition": text_repetition,
+    "text_contamination": text_contamination,
+    "text_fingerprint": text_fingerprint,
+    "text_ngram_freq": text_ngram_freq,
+    "recon_match_exact": recon_match_exact,
+    "recon_duplicate_losers": recon_duplicate_losers,
+    "sim_recall_probe_sampled": sim_recall_probe_sampled,
+    "text_bpe_vocab_roundtrip": text_bpe_vocab_roundtrip,
+    "mm_payload_dedup": mm_payload_dedup,
+    "text_bpe_merges": text_bpe_merges,
+    "text_bpe_encode": text_bpe_encode,
+    "text_quality_gate": text_quality_gate,
+    "text_datacard": text_datacard,
+    "text_ngram_novelty": text_ngram_novelty,
+    "text_split_cluster_safe": text_split_cluster_safe,
+    "text_dup_spans": text_dup_spans,
+    "text_dup_spans_trim": text_dup_spans_trim,
+    "dedup_ngram_jaccard": dedup_ngram_jaccard,
+    "dedup_embedding_cosine": dedup_embedding_cosine,
+    "sim_knn_join": sim_knn_join,
+    "sim_semantic_dedup": sim_semantic_dedup,
+    "recon_residual_internal": recon_residual_internal,
+    "recon_residual_external": recon_residual_external,
+    "text_line_dedup": text_line_dedup,
+    "text_line_dedup_trim": text_line_dedup_trim,
+    "curation_pipeline_v4": curation_pipeline_v4,
+    "text_pii_scrub": text_pii_scrub,
+    "text_pack_shards_roundtrip": text_pack_shards_roundtrip,
+    "text_bloom_decontaminate": text_bloom_decontaminate,
+    "events_hist_merge": events_hist_merge,
+    "text_split_leakage_safe": text_split_leakage_safe,
+    "dedup_source_overlap": dedup_source_overlap,
+    "sim_topk_ivf_fitted": sim_topk_ivf_fitted,
+    "dedup_embedding_cosine_fitted": dedup_embedding_cosine_fitted,
+    "recon_persist_roundtrip": recon_persist_roundtrip,
+    "recon_csv_roundtrip": recon_csv_roundtrip,
+    "recon_csv_sink_roundtrip": recon_csv_sink_roundtrip,
+    "recon_mongo_json_scan": recon_mongo_json_scan,
+    "recon_orc_roundtrip": recon_orc_roundtrip,
+    "stream_incremental_match": stream_incremental_match,
+    "stream_dedup_corpus": stream_dedup_corpus,
+    "stream_dedup": stream_dedup_events,
+    "stream_events_hourly": stream_events_hourly,
 }
 
 

@@ -9,7 +9,9 @@ inputs.
 Spark port fixes the reference's recomputation anti-pattern
 (second_conciliate.py:513-544 re-executes the plan per ``collect``): inputs
 and residuals are materialized between passes — each pass's match + two
-anti-joins reuse one pair of cached inputs.
+anti-joins reuse one pair of cached inputs. The final buckets are
+materialized once, in ``buckets()``, so the summary, the sinks and the
+state upsert all read one stored copy.
 
 Materialization strategy (``materialize`` field): a cascade is a *deep*
 plan — each pass's logical tree embeds every earlier pass — and with AQE
@@ -216,6 +218,15 @@ class Reconciliation:
         return self.buckets()
 
     def buckets(self) -> dict[str, DataFrame]:
+        """The final buckets, each materialized once: every consumer (the
+        summary, the sinks, the state upsert) then reads the stored copy
+        instead of recomputing the last pass's unions. Idempotent — a
+        second call returns the same frames — and ``unpersist`` releases
+        them with the pass inputs."""
+        for name in ("a_to_b_mt", "a_to_b_nmt", "b_to_a_nmt", "z_eff_a"):
+            df = getattr(self, name)
+            if df is not None:
+                setattr(self, name, self._persist(df))
         empty_a = self.a_df.limit(0)
         return {
             "a_to_b_mt": self.a_to_b_mt if self.a_to_b_mt is not None else empty_a,

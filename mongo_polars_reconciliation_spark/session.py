@@ -40,6 +40,13 @@ def get_spark(
         # frequent dim-sized joins (losers/zero-effect ids/tolerance keys)
         # from shuffle joins into broadcast-hash joins.
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        # generated-class cache (LRU, default 100). One reconciliation
+        # window (scan, cascade, summary, sinks, state upsert) needs about
+        # 190 distinct classes, so at 100 every class is evicted before the
+        # next window asks for it and each window recompiles ~174 of them.
+        # 512 holds that working set with room to spare: later windows
+        # compile only the classes their new time-range literals need.
+        .config("spark.sql.codegen.cache.maxEntries", "512")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # events.parquet has shipped as TIMESTAMP(NANOS,false) in some

@@ -49,16 +49,6 @@ def write_time_partitioned(
     df.repartitionByRange(num_partitions, ts_col).write.mode("overwrite").parquet(path)
 
 
-def _fs_delete(df: DataFrame, path: str) -> None:
-    """Drop a staging dir through the Hadoop FileSystem API (works for any
-    scheme — file://, s3a://, hdfs://) — the ``clean_tmp_collections`` step."""
-    spark = df.sparkSession
-    jvm = spark._jvm  # noqa: SLF001
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-    fs.delete(p, True)
-
-
 def persist_results(
     buckets: dict[str, tuple[DataFrame, str]],
     out_root: str,
@@ -72,39 +62,38 @@ def persist_results(
     and the tmp collection dropped; finally the aggregated-results document
     is saved (second_conciliate.py:450-483).
 
-    Spark shape: stage → publish. Each bucket lands in a staging dir first
-    (one atomic-ish publish point per bucket, like the tmp collection),
-    then the staged data — a plain scan, no recomputation of the cascade —
-    is range-repartitioned on its time column and written to the final
-    dir; the staging dir is dropped. The manual interval fan-out becomes
-    ``repartitionByRange(num_partitions, ts_col)``: same contiguous
-    time-range files, executor-parallel instead of thread-pooled.
+    Spark shape: checkpoint → publish. Each bucket is marked for a lazy
+    local checkpoint, then range-repartitioned on its time column and
+    written straight to its final dir. The range partitioner's sample job
+    computes the bucket once and fills the checkpoint; the write reads
+    the checkpoint, so the bucket's plan never runs twice and no staging
+    dir is written, re-read or dropped. The manual interval fan-out
+    becomes ``repartitionByRange(num_partitions, ts_col)``: same
+    contiguous time-range files, executor-parallel instead of
+    thread-pooled.
 
     ``buckets``: name → (frame, time column for the partitioned move).
     Returns name → final path (plus ``"aggregated_results"`` when
     ``summary`` is given).
 
-    The per-bucket stage→publish chains are INDEPENDENT (distinct source
-    frames, distinct target dirs), so they run on a small driver thread
-    pool (r16, guide §2.6): Spark's scheduler happily overlaps the jobs,
-    and the next bucket's stage write back-fills executors idled by the
-    previous one's straggler tasks — the reference itself ran this loop
-    on a thread pool (second_conciliate.py:409-417). Two workers is
-    enough to fill the tail without starving any single write; results
-    are byte-identical (no shared mutable state, writes land in disjoint
-    dirs)."""
+    The per-bucket chains are INDEPENDENT (distinct source frames,
+    distinct target dirs), so they run on a small driver thread pool
+    (guide §2.6): Spark's scheduler overlaps the jobs, and the next
+    bucket's write back-fills executors idled by the previous one's
+    straggler tasks — the reference itself ran this loop on a thread pool
+    (second_conciliate.py:409-417). Two workers is enough to fill the
+    tail without starving any single write; results are byte-identical
+    (no shared mutable state, writes land in disjoint dirs)."""
     from concurrent.futures import ThreadPoolExecutor
 
     paths: dict[str, str] = {}
 
     def _persist_one(item: tuple[str, tuple[DataFrame, str]]) -> tuple[str, str]:
         name, (df, ts_col) = item
-        staging = f"{out_root}/__tmp_{name}"
-        df.write.mode("overwrite").parquet(staging)
-        staged = df.sparkSession.read.parquet(staging)
         final = f"{out_root}/{name}"
-        write_time_partitioned(staged, final, ts_col, num_partitions)
-        _fs_delete(df, staging)
+        write_time_partitioned(
+            df.localCheckpoint(eager=False), final, ts_col, num_partitions
+        )
         return name, final
 
     with ThreadPoolExecutor(max_workers=2) as pool:

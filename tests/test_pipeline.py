@@ -188,3 +188,28 @@ def test_cascade_exact_then_tolerance(spark):
     assert got["a_to_b_nmt"] == (1, 30.0)
     assert got["z_eff_a"] == (1, 40.0)
     rc.unpersist()
+
+
+def test_buckets_materialized_once(spark):
+    """``buckets()`` stores each final bucket once and hands back the same
+    frames on every call — as checkpoint leaves (``LogicalRDD``) in
+    checkpoint mode, as cached frames in persist mode — and ``unpersist``
+    releases the cached copies."""
+    a, b = build(spark)
+    passes = [ExactPass(), TolerancePass((ToleranceRule("importe", 1.0),))]
+    for mode in ("checkpoint", "persist"):
+        rc = Reconciliation(CFG, a, b, materialize=mode)
+        first = rc.run(passes, zero_effect_rules=[ZE])
+        second = rc.buckets()
+        for name, df in first.items():
+            assert second[name] is df, (mode, name)
+            if mode == "checkpoint":
+                root = df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+                assert root == "LogicalRDD", (name, root)
+            else:
+                assert df.storageLevel.useMemory, name
+        assert rows(second["a_to_b_mt"], "_id") == [("a1",), ("a2",)]
+        assert rows(second["b_to_a_nmt"], "ext_file_row_number") == [(3,)]
+        rc.unpersist()
+        if mode == "persist":
+            assert not any(df.storageLevel.useMemory for df in first.values())
